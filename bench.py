@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the registry's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[N] (N = the cores this process may run on) and prints ONE JSON line.
 
 Usage: python bench.py [--cpus N] [--sf-dir DIR] [--queries a,b,c]
 """
@@ -17,7 +17,7 @@ import time
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
@@ -34,11 +34,7 @@ def main() -> None:
 
     from tscan_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="tscan_spark_bench",
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=max(int(args.cpus), 8),
-    )
+    spark = get_spark(app_name="tscan_spark_bench", master=f"local[{args.cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     from tscan_spark.registry import QUERIES
@@ -92,7 +88,7 @@ def main() -> None:
         "queries": timings,
         "sf": args.sf_dir.rstrip("/").split("sf")[-1],
         "total_sec": round(total, 3),
-        "cpus": int(args.cpus),
+        "cpus": args.cpus,
         "n_docs": n_docs,
     }
     # full record to disk (BENCH_HEAD.json, the CORRECTNESS_HEAD.json

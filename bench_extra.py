@@ -22,7 +22,7 @@ import time
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
@@ -36,11 +36,7 @@ def main() -> None:
 
     from tscan_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="tscan_spark_bench_extra",
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=max(int(args.cpus), 8),
-    )
+    spark = get_spark(app_name="tscan_spark_bench_extra", master=f"local[{args.cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     from tscan_spark.registry import QUERIES

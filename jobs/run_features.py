@@ -41,18 +41,15 @@ def main() -> int:
     ap.add_argument("--list", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from tscan_spark.registry import QUERIES
-    from tscan_spark.session import tune
+    from tscan_spark.session import builder, tune
 
     if args.list:
         for name in QUERIES:
             print(name)
         return 0
 
-    spark = SparkSession.builder.appName("tscan_spark_job").getOrCreate()
-    tune(spark)
+    spark = tune(builder("tscan_spark_job").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     metrics = {}
@@ -89,7 +86,17 @@ def main() -> int:
         metrics[name] = {"rows": n, "sec": round(time.time() - t0, 3)}
         print(f"# {name}: {n} rows in {metrics[name]['sec']}s", file=sys.stderr)
 
-    print(json.dumps({"job": "tscan_spark", "queries": metrics}))
+    conf = spark.conf
+    print(
+        json.dumps(
+            {
+                "job": "tscan_spark",
+                "shuffle_partitions": int(conf.get("spark.sql.shuffle.partitions")),
+                "dataframe_debugging": conf.get("spark.python.sql.dataFrameDebugging.enabled"),
+                "queries": metrics,
+            }
+        )
+    )
     return 0
 
 

@@ -30,7 +30,7 @@ TABLES = (
 def spark():
     from tscan_spark.session import get_spark
 
-    s = get_spark(app_name="tscan_spark_tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(app_name="tscan_spark_tests", master="local[4]")
     yield s
     s.stop()
 

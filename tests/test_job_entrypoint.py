@@ -68,6 +68,10 @@ def test_checkpointed_write_and_metrics_line(tmp_path):
     record = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
     n = record["queries"]["docs_tokenized"]["rows"]
     assert n > 0
+    # the job's own session follows the contract: derived shuffle
+    # parallelism (local[*] here) and the debugging wrapper off
+    assert record["shuffle_partitions"] == max(len(os.sched_getaffinity(0)), 8)
+    assert record["dataframe_debugging"] == "false"
     # the write really landed, resumable-runner layout + lineage present
     assert os.path.isdir(os.path.join(out_dir, "docs_tokenized"))
     assert os.path.isdir(os.path.join(ckpt_dir, "docs_tokenized"))

@@ -610,10 +610,13 @@ def test_np_dot_fp_matches_jvm_expression(spark):
     """The Arrow/numpy fixed-point dot must be bit-identical to the JVM
     per-term expression SUM(CAST(ROUND(x*y*FP12,0) AS BIGINT)) — incl.
     ROUND's HALF_UP behaviour at exact .5 ties, both signs."""
-    from tscan_spark.operators.similarity import FP12, _np_dot_fp_udf
+    import numpy as np
 
-    # 0.5/FP12 * 1.0 * FP12 = 0.5 exactly -> HALF_UP gives 1 (not 0);
-    # negative tie -0.5 -> -1 (away from zero); plus generic values
+    from tscan_spark.operators.similarity import FP12, _np_dot_fp_udf, _round_half_up
+
+    # double inputs: 0.5/FP12 * 1.0 * FP12 = 0.5 exactly -> HALF_UP
+    # gives 1 (not 0); negative tie -0.5 -> -1 (away from zero); plus
+    # generic values. (As float32, 0.5/FP12 * FP12 is 0.4999999980.)
     tie = 0.5 / FP12
     rows = [
         (1, [tie, -tie, 0.25, -0.125], [1.0, 1.0, 0.5, 0.75]),
@@ -621,7 +624,7 @@ def test_np_dot_fp_matches_jvm_expression(spark):
         (3, [0.0, 0.0], [0.0, 0.0]),
     ]
     df = spark.createDataFrame(
-        rows, "id int, a array<float>, b array<float>"
+        rows, "id int, a array<double>, b array<double>"
     )
     jvm_term = F.expr(
         "aggregate(zip_with(a, b, (x, y) -> "
@@ -638,6 +641,18 @@ def test_np_dot_fp_matches_jvm_expression(spark):
         .collect()
     )
     assert all(r.np_dot == r.jvm_dot for r in got), got
+
+    # x*y*FP12 never lands on the double just below 0.5, where adding
+    # 0.5 rounds up; check the rounding itself against ROUND on doubles
+    below = 0.49999999999999994
+    vals = [below, -below, 0.5, -0.5, 1.5, -2.5, 2.4999999999999996]
+    jvm = [
+        r.r
+        for r in spark.createDataFrame([(v,) for v in vals], "v double")
+        .select(F.expr("ROUND(v, 0)").alias("r"))
+        .collect()
+    ]
+    assert _round_half_up(np.array(vals)).tolist() == jvm, jvm
 
 
 def test_paragraph_ext_match_oracle(spark, oracle):
@@ -1600,12 +1615,24 @@ def test_ann_recall_eval_matches_oracle(spark, oracle):
 
 def test_dedup_recall_eval_matches_oracle(spark, oracle):
     """Oracle match + set identities: n_both <= min(n_exact, n_lsh)
-    and recall = n_both / n_exact."""
+    and recall = n_both / n_exact; releasing the result's caches frees
+    every RDD the query persisted."""
+    from tscan_spark.cache import release_caches
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # earlier tests' results may hold caches of the same subtrees, which
+    # this query's persist() would share instead of adding its own
+    spark.catalog.clearCache()
+    before = persisted()
     df = QUERIES["dedup_recall_eval"](spark, SF_DIR)
     assert_matches_oracle(df, oracle, ORACLES["dedup_recall_eval"])
     row = df.toPandas().iloc[0]
     assert row["n_both"] <= min(row["n_exact"], row["n_lsh"])
     assert abs(row["lsh_recall"] - row["n_both"] / row["n_exact"]) < 1e-6
+    release_caches(df)
+    assert persisted() <= before
 
 
 def test_quality_quantile_gate_matches_oracle(spark, oracle):

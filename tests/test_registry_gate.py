@@ -88,18 +88,6 @@ def test_correctness_sf01_ledger_covers_registry():
     assert not not_ok, f"sf0.01 ledger has non-OK verdicts: {not_ok}"
 
 
-def test_gate_rotation_prefix_leads_registry():
-    """Round-5 rotation pin: the driver gate hashes the first ~50
-    QUERIES entries in iteration order, so the never-driver-hashed
-    queries must actually lead the dict (VERDICT r04 'What's wrong' #1).
-    """
-    from tscan_spark.registry import _GATE_ROTATION_PREFIX
-
-    QUERIES, _ = _registry()
-    assert len(_GATE_ROTATION_PREFIX) == 50
-    assert list(QUERIES)[:50] == _GATE_ROTATION_PREFIX
-
-
 def test_bench_head_record_and_summary_budget():
     """BENCH_r04.json was truncation-nulled: the 117-query stdout line
     exceeded the driver's ~2 KB tail capture. Pins: (a) bench.py writes

@@ -82,7 +82,7 @@ def main() -> int:
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
 
-    spark = get_spark(app_name="check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="check", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

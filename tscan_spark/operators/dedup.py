@@ -86,7 +86,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # persist their shared shingle subtree (the plan consumes it 2-4x and
 # exchange reuse does not cover it; measured: dropping the persist cost
 # +60% on minhash_lsh at sf0.1); the caller unpersists after consuming.
-from tscan_spark.cache import release_caches, with_cache as _with_cache  # noqa: F401
+from tscan_spark.cache import carry_caches, release_caches, with_cache as _with_cache  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -738,7 +738,7 @@ def _span_grams(documents: DataFrame) -> DataFrame:
     """(doc_id, pos, gram_id) for every SPAN_K-gram with its position.
 
     Narrow array construction (no Window shuffle — same rationale as
-    :func:`shingles`); ``pos`` keeps the RAW split index of the gram's
+    :func:`shingles_raw`); ``pos`` keeps the RAW split index of the gram's
     first token (the tokens_long word_idx contract counts empty-string
     positions too), so the raw positions ride along the empty filter
     and the gram text is assembled by arrays_zip over SPAN_K shifted
@@ -1291,12 +1291,10 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared (guide §2.4: one shingle construction pass instead of two).
     """
     sh = shingles_raw(_docs(spark, sf_dir)).persist()
-    exact = ngram_jaccard_pairs(spark, sf_dir, sh=sh).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_exact")
-    )
-    lsh = minhash_lsh_pairs(spark, sf_dir, sh=sh).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_lsh")
-    )
+    exact_pairs = ngram_jaccard_pairs(spark, sf_dir, sh=sh)
+    lsh_pairs = minhash_lsh_pairs(spark, sf_dir, sh=sh)
+    exact = exact_pairs.select("doc_a", "doc_b", F.lit(1).alias("in_exact"))
+    lsh = lsh_pairs.select("doc_a", "doc_b", F.lit(1).alias("in_lsh"))
     joined = exact.join(lsh, ["doc_a", "doc_b"], "full")
     out = joined.agg(
         F.coalesce(F.sum("in_exact"), F.lit(0)).cast("int").alias("n_exact"),
@@ -1324,10 +1322,7 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("lsh_recall"),
     )
-    caches = list(getattr(exact, "_tscan_caches", [])) + list(
-        getattr(lsh, "_tscan_caches", [])
-    )
-    return _with_cache(out, *caches, sh)
+    return carry_caches(_with_cache(out, sh), exact_pairs, lsh_pairs)
 
 
 def sql_dedup_recall_eval() -> str:

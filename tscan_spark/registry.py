@@ -1875,96 +1875,3 @@ def q_corpus_stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_doc_len"),
     )
 
-
-# ---------------------------------------------------------------------------
-# Driver-gate rotation (round 5)
-# ---------------------------------------------------------------------------
-# The driver's correctness gate hashes roughly the first 50 entries of
-# QUERIES in iteration order, so insertion order decides which queries
-# ever get a driver row.  Rounds 1-4 hashed the same definition-order
-# prefix; 42 queries (the whole round-4 LLM-pipeline battery plus the
-# parse tail and the flagship profile) never got one.  This block
-# rotates the dict so those 42 lead, padded to 50 with the
-# least-recently-hashed queries (surprisal_features / tscan_staph_bands
-# were last hashed in round 1, the next five in round 3) plus the
-# round-5-registered pack_sequences_fine.  The remaining queries keep
-# their relative definition order after the prefix.
-#
-# Round-6 rotation (applied below, same policy): the 5 never-GREEN
-# queries lead (the round-5 hash-reds, now dtype-aligned — VERDICT r5
-# "Next round" #1 requires them hashed green this round), then
-# ascending most-recent-hashed-round over the union of
-# CORRECTNESS_r01..r05 (the r3-hashed block first — the r1-hashed
-# name was since renamed — then the r4-hashed alphabetically to 50).
-# Round-7 rotation note: rerun the same policy against the union
-# including CORRECTNESS_r06.json — the r5-hashed block (45 green rows)
-# is then the least-recent and rotates in.
-_GATE_ROTATION_PREFIX = [
-    "tscan_doc_profile",
-    "tscan_doc_profile_staged",
-    "token_drift_kl",
-    "vocab_growth",
-    "kmeans_clusters",
-    "parse_dep_distance",
-    "parse_doc_summary",
-    "parse_tree_depth",
-    "prevalence_features",
-    "problems_log",
-    "rel_customers_without_orders",
-    "rel_pricing_summary",
-    "rel_revenue_by_nation",
-    "rel_top_orders",
-    "tscan_doc_features_ext",
-    "tscan_doc_ratios",
-    "tscan_general_doc_features",
-    "tscan_metrics_long",
-    "tscan_paragraph_features",
-    "tscan_paragraph_features_ext",
-    "tscan_sentence_features_ext",
-    "tscan_word_csv",
-    "tscan_word_features_dim",
-    "als_connectives",
-    "asof_lexicon_features",
-    "asof_lexicon_features_broadcast",
-    "backfill_events",
-    "bpe_apply_merge",
-    "bpe_tokenize",
-    "bpe_top_pairs",
-    "compound_split",
-    "decontaminate_ngram",
-    "dedup_clusters",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_substring_spans",
-    "doc_fingerprint",
-    "doc_mtld",
-    "doc_sliding_overlap",
-    "docs_tokenized",
-    "domain_mix_rates",
-    "frog_feature_decode",
-    "lag_lead_events",
-    "lang_id",
-    "lm_bigram_doc",
-    "lm_perplexity_buckets",
-    "multimodal_decode",
-]
-
-
-def _rotate_gate_order() -> None:
-    missing = [n for n in _GATE_ROTATION_PREFIX if n not in QUERIES]
-    if missing:  # a rename must update the rotation list, loudly
-        raise KeyError(f"gate rotation names unknown queries: {missing}")
-    prefix = set(_GATE_ROTATION_PREFIX)
-    order = _GATE_ROTATION_PREFIX + [n for n in QUERIES if n not in prefix]
-    rotated_q = {n: QUERIES[n] for n in order}
-    QUERIES.clear()
-    QUERIES.update(rotated_q)
-    rotated_o = {n: ORACLES[n] for n in order if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(rotated_o)
-
-
-_rotate_gate_order()

@@ -1,8 +1,19 @@
 """SparkSession construction and runtime tuning.
 
-The engine may receive an externally-built session (the driver contract
-passes one in), so all scale-relevant settings that are runtime-settable
-are applied by :func:`tune` rather than only at builder time.
+Each engine conf is set in exactly one place, chosen by when Spark lets
+it change:
+
+- **Launch-time confs** (static SQL confs, JVM options, driver heap, UI)
+  only take effect when the context starts, so only :func:`builder` sets
+  them. :func:`get_spark` and ``jobs/run_features.py`` build through it.
+- **Runtime confs** are set only by :func:`tune`, which every registered
+  query applies to the session it is given. Shuffle parallelism is
+  derived there from the session's ``defaultParallelism`` unless the
+  launch conf already carries it (``spark-submit --conf``).
+
+A session built elsewhere (the driver contract, a host notebook) gets
+the runtime confs from :func:`tune` but keeps its own launch-time confs,
+including PySpark's per-op DataFrame-debugging wrapper if it left it on.
 """
 
 from __future__ import annotations
@@ -11,7 +22,31 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied to any session we run on.
+_LAUNCH_CONF = {
+    # PySpark 4's DataFrame debugging wraps EVERY DataFrame/Column op to
+    # capture its Python call site for error context — ~4 py4j round
+    # trips + a stack walk per op. The wide-vector builders here issue
+    # thousands of ops per query, and profiling showed this wrapper as
+    # ~half of tscan_doc_profile's 14s driver-side construction time
+    # (guide §5: the driver should do almost no work). Error messages
+    # lose only the Python call-site decoration. A static conf: setting
+    # it on a running session raises CANNOT_MODIFY_STATIC_CONFIG.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # release dropped broadcast/shuffle state between queries in
+    # long-lived benchmark/driver sessions — 30min, NOT 1min: each
+    # trigger is a stop-the-world full GC of the 32g heap, and at
+    # 1min the pauses landed on random queries (5-20s inflation
+    # moving between runs)
+    "spark.cleaner.periodicGC.interval": "30min",
+    # whole-stage codegen across ~60 wide queries fills the default
+    # ~240m JIT code cache; once full the JVM stops compiling and
+    # late queries run interpreted (measured 3-10x, later 10-45x
+    # slowdowns as the query battery grew) — reserve big and keep
+    # flushing enabled so cold compiled methods can be evicted
+    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
+    "spark.ui.enabled": "false",
+}
+
 # AQE gives shuffle-coalescing + skew-join splitting at 100 TB scale;
 # Arrow is mandatory for the pandas-UDF kernels (vectorized, never
 # per-row Python); UTC pins timestamp semantics so results are
@@ -26,26 +61,25 @@ _RUNTIME_CONF = {
     # engine is far below that (reference lexicons are ~3.5 MB each,
     # /root/reference/data/prevalence_nl.data)
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # PySpark 4's DataFrame debugging wraps EVERY DataFrame/Column op to
-    # capture its Python call site for error context — ~4 py4j round
-    # trips + a stack walk per op. The wide-vector builders here issue
-    # thousands of ops per query, and profiling showed this wrapper as
-    # ~half of tscan_doc_profile's 14s driver-side construction time
-    # (guide §5: the driver should do almost no work). Error messages
-    # lose only the Python call-site decoration.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an existing session."""
+    """Apply the runtime engine confs to an existing session.
+
+    Shuffle parallelism is one partition per core (at least 8): every
+    stage stays fully parallel without tiny-partition overhead at test
+    scale, and AQE coalesces from there. A value in the launch conf
+    wins; ``SparkContext._conf.contains`` checks that without copying
+    the whole conf (``getConf()``), since this runs once per query.
+    """
     for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # conf locked by the host session — keep going; every
-            # operator is still correct, only planning quality varies.
-            pass
+        spark.conf.set(k, v)
+    sc = spark.sparkContext
+    if not sc._conf.contains(_SHUFFLE_PARTITIONS):
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(max(sc.defaultParallelism, 8)))
     _tune_gateway_sockets()
     return spark
 
@@ -76,7 +110,7 @@ def _default_driver_mem() -> str:
     """8g library default; 32g only when the host clearly has headroom.
 
     Long bench/driver sessions on the 128 GiB sandbox need the big heap
-    (see the GC note below), but baking 32g into the library default
+    (see :func:`builder`), but baking 32g into the library default
     would swap or OOM-kill smaller hosts.
     """
     try:
@@ -90,62 +124,25 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
-def get_spark(
-    app_name: str = "tscan_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def builder(app_name: str) -> SparkSession.Builder:
+    """A session builder carrying every launch-time conf.
+
+    The driver heap is a deployment setting: derived from host RAM,
+    overridden by ``TSCAN_SPARK_DRIVER_MEM``. A single-JVM local session
+    hosts driver, executors and every broadcast; 8g thrashed GC after
+    ~50 sequential queries in one session (late queries measured 3-10x
+    their isolated cost).
+    """
+    mem = os.environ.get("TSCAN_SPARK_DRIVER_MEM", _default_driver_mem())
+    return SparkSession.builder.appName(app_name).config(
+        map={"spark.driver.memory": mem, **_LAUNCH_CONF}
+    )
+
+
+def get_spark(app_name: str = "tscan_spark", master: str = "local[*]") -> SparkSession:
     """Build (or reuse) a tuned local session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract);
-    on a real cluster this function is not used — spark-submit owns the
-    session and :func:`tune` is applied instead.
+    On a cluster spark-submit owns the master; ``jobs/run_features.py``
+    builds through :func:`builder` without one and applies :func:`tune`.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local mode: one shuffle partition per core keeps every stage
-        # fully parallel without tiny-partition overhead at test SF.
-        try:
-            n = int(master.split("[")[1].rstrip("]").replace("*", "32"))
-        except Exception:
-            n = 32
-        shuffle_partitions = max(n, 8)
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # single-JVM local mode hosts driver + executors + every
-        # broadcast; 8g thrashed GC after ~50 sequential queries in one
-        # session (late queries measured 3-10x their isolated cost).
-        # Derived from host RAM rather than hard-coded: 32g is only safe
-        # on large hosts; smaller boxes keep the 8g library default
-        # (override with TSCAN_SPARK_DRIVER_MEM either way).
-        .config("spark.driver.memory", os.environ.get("TSCAN_SPARK_DRIVER_MEM", _default_driver_mem()))
-        # release dropped broadcast/shuffle state between queries in
-        # long-lived benchmark/driver sessions — 30min, NOT 1min: each
-        # trigger is a stop-the-world full GC of the 32g heap, and at
-        # 1min the pauses landed on random queries (5-20s inflation
-        # moving between runs)
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("TSCAN_SPARK_PERIODIC_GC", "30min"),
-        )
-        # whole-stage codegen across ~60 wide queries fills the default
-        # ~240m JIT code cache; once full the JVM stops compiling and
-        # late queries run interpreted (measured 3-10x, later 10-45x
-        # slowdowns as the query battery grew) — reserve big and keep
-        # flushing enabled so cold compiled methods can be evicted
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("TSCAN_SPARK_CODE_CACHE", "2g")
-            + " -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    return tune(builder.getOrCreate())
+    return tune(builder(app_name).master(master).getOrCreate())

@@ -12,7 +12,7 @@ def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from tscan_spark.session import get_spark
 
-    spark = get_spark(app_name="audit_plans", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="audit_plans", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     from tscan_spark import corpus, pipeline, pipeline_ratios
     from tscan_spark.operators import asof, dedup, ner, similarity
